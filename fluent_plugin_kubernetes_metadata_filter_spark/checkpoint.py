@@ -46,13 +46,22 @@ def input_snapshot_id(spark: SparkSession, path: str) -> str:
     """Stable fingerprint of a parquet input (Iceberg: use snapshot-id).
 
     File listing happens once on the driver; (name, size, mtime) is the
-    same contract Spark's own file-source cache invalidation uses."""
+    same contract Spark's own file-source cache invalidation uses. A
+    single-file input is fingerprinted as that file. A listing with no
+    parquet file (missing path, empty directory, a remote URI the local
+    filesystem cannot list) raises ValueError: a constant fingerprint
+    would make a resumed run treat any new input as already written."""
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = [os.path.join(root, f) for root, _dirs, names in os.walk(path)
+                 for f in names if f.endswith(".parquet")]
+    if not files:
+        raise ValueError(f"no parquet file to fingerprint at {path!r}")
     entries = []
-    for root, _dirs, files in os.walk(path):
-        for f in sorted(files):
-            if f.endswith(".parquet"):
-                st = os.stat(os.path.join(root, f))
-                entries.append(f"{os.path.join(root, f)}:{st.st_size}:{int(st.st_mtime)}")
+    for f in files:
+        st = os.stat(f)
+        entries.append(f"{f}:{st.st_size}:{int(st.st_mtime)}")
     return hashlib.md5("\n".join(sorted(entries)).encode()).hexdigest()
 
 

@@ -104,7 +104,7 @@ def grok_extract(df: DataFrame, source_col: str, expr: str,
     """Add one column per grok field (null when the line doesn't match).
 
     Per-field ``when(matched, extract)`` ON PURPOSE (round 7): a staged
-    all-fields struct (the parse.extract_native trick) was measured
+    all-fields struct (the parse.extract_source_fields trick) was measured
     SLOWER here — 1.6 s vs 1.0 s on the sf0.1 logs — because queries
     select a SUBSET of grok fields and column pruning removes unused
     per-field extracts but cannot prune inside a materialized struct,

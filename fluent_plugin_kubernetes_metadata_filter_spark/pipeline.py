@@ -19,6 +19,7 @@ from fluent_plugin_kubernetes_metadata_filter_spark.enrich import (
     enrich,
 )
 from fluent_plugin_kubernetes_metadata_filter_spark.io import load_table, write_routed
+from fluent_plugin_kubernetes_metadata_filter_spark.metrics import PipelineStats
 from fluent_plugin_kubernetes_metadata_filter_spark.route import (
     PASSTHROUGH,
     per_sink_counts,
@@ -27,6 +28,7 @@ from fluent_plugin_kubernetes_metadata_filter_spark.route import (
 )
 
 INPUT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+EMIT_COLS = INPUT_COLS + ["turn_seq", "kubernetes_meta", "docker_meta", "namespace_name"]
 
 
 def enrich_transcripts(spark: SparkSession, sf_dir: str,
@@ -40,11 +42,13 @@ def enrich_transcripts(spark: SparkSession, sf_dir: str,
 
 
 def routed_frames(src: DataFrame, pods: DataFrame, ns: DataFrame,
-                  cfg: PipelineConfig = PipelineConfig()) -> DataFrame:
+                  cfg: PipelineConfig = PipelineConfig(),
+                  stats: PipelineStats | None = None) -> DataFrame:
     """Frame-level composition shared by the sandbox and cluster entry
-    points — ONE definition of the output contract (pruned emit shape:
-    input cols + turn_seq + assembled structs; no scratch columns) and
-    ONE shuffle plan, whatever the source."""
+    points — ONE definition of the output contract (pruned emit shape
+    EMIT_COLS; no scratch columns) and ONE shuffle plan, whatever the
+    source. ``stats``, when given, is attached to the enriched rows so
+    its counters ride the same DAG execution as the write."""
     # Order of operations is chosen by shuffle VOLUME:
     # 1. stable_order on the RAW input — the conv_id window shuffles only
     #    the 6 narrow input columns, not the enriched width;
@@ -55,9 +59,9 @@ def routed_frames(src: DataFrame, pods: DataFrame, ns: DataFrame,
     #    exchange undo the salt right before the write.
     df = stable_order(src)
     df = enrich(df, pods, ns, cfg)
-    df = assemble_structs(df)
-    keep = INPUT_COLS + ["turn_seq", "kubernetes_meta", "docker_meta", "namespace_name"]
-    df = df.select(*keep)
+    if stats is not None:
+        df = stats.attach(df)
+    df = assemble_structs(df).select(*EMIT_COLS)
     if not cfg.route_exchange:
         # single-exchange mode: the conv_id window exchange (narrow
         # columns) is the job's ONLY shuffle — enrichment is broadcast
@@ -170,21 +174,16 @@ def run_resumable(spark: SparkSession, sf_dir: str, out_dir: str,
         resumable_fanout_write,
     )
     from fluent_plugin_kubernetes_metadata_filter_spark.io import aux_dir
-    from fluent_plugin_kubernetes_metadata_filter_spark.metrics import PipelineStats
 
     snapshot = input_snapshot_id(spark, aux_dir(sf_dir))
-    df = load_table(spark, sf_dir, "transcripts")
-    df = stable_order(df)
-    pods = load_table(spark, sf_dir, "pods_dim")
-    ns = load_table(spark, sf_dir, "namespaces_dim")
-    df = enrich(df, pods, ns, cfg)
     stats = PipelineStats()
-    df = stats.attach(df)
-    df = assemble_structs(df)
-    keep = INPUT_COLS + ["turn_seq", "kubernetes_meta", "docker_meta", "namespace_name"]
-    df = df.select(*keep)
-    if cfg.route_exchange:
-        df = route_partition(df, cfg, cfg.route_column)
+    df = routed_frames(
+        load_table(spark, sf_dir, "transcripts"),
+        load_table(spark, sf_dir, "pods_dim"),
+        load_table(spark, sf_dir, "namespaces_dim"),
+        cfg,
+        stats,
+    )
     manifest = LineageManifest(manifest_dir)
     written = resumable_fanout_write(df, out_dir, manifest, snapshot, cfg.route_column)
     return {

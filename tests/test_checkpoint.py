@@ -1,9 +1,14 @@
 """Resumability: lineage manifest + skip of completed sinks."""
 
+import hashlib
 import os
 import tempfile
+import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
+import pytest
 
 from fluent_plugin_kubernetes_metadata_filter_spark import pipeline
 from fluent_plugin_kubernetes_metadata_filter_spark.checkpoint import (
@@ -21,6 +26,22 @@ def test_snapshot_id_stable(spark):
     a = input_snapshot_id(spark, base)
     b = input_snapshot_id(spark, base)
     assert a == b and len(a) == 32
+
+
+def test_snapshot_id_fails_loudly_or_fingerprints_the_file(spark, tmp_path):
+    """A path the listing cannot see must raise, not fingerprint as
+    md5("") — a constant id would make a resumed run skip every sink of
+    a new input. A single-file input is fingerprinted as that file."""
+    for path in (str(tmp_path / "missing"), "s3://bucket/transcripts.parquet"):
+        with pytest.raises(ValueError):
+            input_snapshot_id(spark, path)
+    f = tmp_path / "one.parquet"
+    pq.write_table(pa.table({"x": [1, 2, 3]}), f)
+    a = input_snapshot_id(spark, str(f))
+    assert a != hashlib.md5(b"").hexdigest()
+    t = time.time() + 5
+    os.utime(f, (t, t))
+    assert input_snapshot_id(spark, str(f)) != a
 
 
 def test_resumable_write_skips_completed(spark):

@@ -26,16 +26,15 @@ from tests.conftest import (
 )
 
 
-def _extract(spark, tag, method="native"):
-    df = extract_source_fields(transcript(spark, tag), method=method)
+def _extract(spark, tag):
+    df = extract_source_fields(transcript(spark, tag))
     return df.select(
         "x_namespace", "x_pod_name", "x_container_name", "x_pod_uuid", "x_docker_id", "x_branch"
     ).collect()[0]
 
 
-@pytest.mark.parametrize("method", ["native", "pandas", "fast"])
-def test_containers_tag(spark, method):
-    r = _extract(spark, TAG_CONTAINERS, method)
+def test_containers_tag(spark):
+    r = _extract(spark, TAG_CONTAINERS)
     assert r.x_namespace == "default"
     assert r.x_pod_name == POD_NAME
     assert r.x_container_name == CONTAINER
@@ -44,9 +43,8 @@ def test_containers_tag(spark, method):
     assert r.x_branch == "containers"
 
 
-@pytest.mark.parametrize("method", ["native", "pandas", "fast"])
-def test_pods_tag(spark, method):
-    r = _extract(spark, TAG_PODS, method)
+def test_pods_tag(spark):
+    r = _extract(spark, TAG_PODS)
     assert r.x_namespace == "default"
     assert r.x_pod_name == POD_NAME
     assert r.x_container_name == CONTAINER
@@ -55,19 +53,17 @@ def test_pods_tag(spark, method):
     assert r.x_branch == "pods"
 
 
-@pytest.mark.parametrize("method", ["native", "pandas", "fast"])
-def test_dotted_pod_name(spark, method):
+def test_dotted_pod_name(spark):
     # test_filter_kubernetes_metadata.rb:560-584
     tag = f"var.log.containers.fabric8-console-controller.98rqc_default_{CONTAINER}-{DOCKER_ID}.log"
-    r = _extract(spark, tag, method)
+    r = _extract(spark, tag)
     assert r.x_pod_name == "fabric8-console-controller.98rqc"
     assert r.x_namespace == "default"
 
 
 @pytest.mark.parametrize("tag", ["non-kubernetes", "", "var.log.containers.malformed"])
-@pytest.mark.parametrize("method", ["native", "pandas", "fast"])
-def test_non_matching(spark, tag, method):
-    r = _extract(spark, tag, method)
+def test_non_matching(spark, tag):
+    r = _extract(spark, tag)
     assert r.x_branch is None
     assert r.x_namespace is None
 
@@ -94,53 +90,6 @@ def test_cache_key_selection(spark):
     assert d1.select("i_cache_key").collect()[0][0] == POD_UID
     d2 = resolve_identity(extract_source_fields(transcript(spark, TAG_CONTAINERS)), cfg)
     assert d2.select("i_cache_key").collect()[0][0] == DOCKER_ID
-
-
-def test_all_strategies_equal_on_corpus(spark):
-    """All three strategies must agree on generated data (sf0.001 corpus)."""
-    from fluent_plugin_kubernetes_metadata_filter_spark.io import load_table
-
-    df = load_table(spark, "/root/testdata/sf0.001", "transcripts").limit(2000)
-    a = extract_source_fields(df, method="native").select(
-        "conv_id", "turn_idx", *[c for c in ("x_namespace", "x_pod_name", "x_container_name", "x_pod_uuid", "x_docker_id", "x_branch")]
-    )
-    for other in ("pandas", "fast"):
-        b = extract_source_fields(df, method=other).select(*a.columns)
-        assert a.exceptAll(b).count() == 0, other
-        assert b.exceptAll(a).count() == 0, other
-
-
-ADVERSARIAL = [
-    "", "non-kubernetes", "var.log.containers.", "var.log.pods.",
-    "var.log.containers.pod_ns_c-" + "a" * 64 + ".log",
-    "var.log.containers.pod_ns_c-" + "a" * 63 + ".log",
-    "var.log.containers.POD_ns_c-" + "a" * 64 + ".log",
-    "prefix.var.log.containers.pod_ns_c-" + "a" * 64 + ".log",
-    "var.log.pods.ns_pod_uuid-1.c.0.log",
-    "var.log.pods.ns_pod_.c.0.log",
-    "var.log.pods.ns_pod_uuid.c.log",
-    "var.log.pods.ns_pod_uuid.c.x.y.log",
-    "var.log.pods.ns_pod.c.0.log",
-    "var.log.containers.pod_ns_c-x-" + "b" * 64 + ".log",
-    "var.log.containers.pod_ns_c-" + "a" * 64 + ".log.extra",
-    "var.log.pods.ns_pod_uuid.c..log",
-    "var.log.containers.pod_ns_with_many_under_c-" + "c" * 64 + ".log",
-    "var.log.pods.ns_my.dotted.pod_uuid.c.0.log",
-]
-
-
-def test_fast_equals_native_on_adversarial(spark):
-    """The split-based fast path must agree with the reference regex on
-    malformed / pathological tags (where it falls back to the regex)."""
-    import pyspark.sql.types as T
-
-    e = spark.createDataFrame(
-        [(t,) for t in ADVERSARIAL], T.StructType([T.StructField("tool", T.StringType())])
-    )
-    cols = ["tool", "x_namespace", "x_pod_name", "x_container_name", "x_pod_uuid", "x_docker_id", "x_branch"]
-    a = sorted(tuple(r) for r in extract_source_fields(e, method="native").select(*cols).collect())
-    b = sorted(tuple(r) for r in extract_source_fields(e, method="fast").select(*cols).collect())
-    assert a == b
 
 
 def test_record_override_wins(spark):

@@ -57,10 +57,12 @@ def test_route_counts_is_partial_agg(spark):
 
 
 def test_no_python_udf_in_native_path(spark):
-    df = q.q_enrich_flat(spark, SF)
-    plan = _plan(df)
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
+    from fluent_plugin_kubernetes_metadata_filter_spark import pipeline
+
+    for df in (q.q_enrich_flat(spark, SF), pipeline.routed_output(spark, SF)):
+        plan = _plan(df)
+        assert "BatchEvalPython" not in plan
+        assert "ArrowEvalPython" not in plan
 
 
 def test_routed_output_has_exactly_two_exchanges(spark):

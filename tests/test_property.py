@@ -11,6 +11,7 @@ from fluent_plugin_kubernetes_metadata_filter_spark.datagen import tag_container
 from fluent_plugin_kubernetes_metadata_filter_spark.parse import (
     REGEX_VAR_LOG_CONTAINERS,
     REGEX_VAR_LOG_PODS,
+    EXTRACTED_COLS,
     extract_source_fields,
 )
 
@@ -49,12 +50,46 @@ def test_pods_roundtrip_python(pod, n, c, u):
     assert m.group("container_name") == c
 
 
+# malformed / pathological tags: wrong charset or hex length, missing
+# fields, mid-string matches, extra suffixes, dotted and underscored names
+ADVERSARIAL = [
+    "", "non-kubernetes", "var.log.containers.", "var.log.pods.",
+    "var.log.containers.pod_ns_c-" + "a" * 64 + ".log",
+    "var.log.containers.pod_ns_c-" + "a" * 63 + ".log",
+    "var.log.containers.POD_ns_c-" + "a" * 64 + ".log",
+    "prefix.var.log.containers.pod_ns_c-" + "a" * 64 + ".log",
+    "var.log.pods.ns_pod_uuid-1.c.0.log",
+    "var.log.pods.ns_pod_.c.0.log",
+    "var.log.pods.ns_pod_uuid.c.log",
+    "var.log.pods.ns_pod_uuid.c.x.y.log",
+    "var.log.pods.ns_pod.c.0.log",
+    "var.log.containers.pod_ns_c-x-" + "b" * 64 + ".log",
+    "var.log.containers.pod_ns_c-" + "a" * 64 + ".log.extra",
+    "var.log.pods.ns_pod_uuid.c..log",
+    "var.log.containers.pod_ns_with_many_under_c-" + "c" * 64 + ".log",
+    "var.log.pods.ns_my.dotted.pod_uuid.c.0.log",
+]
+
+
+def _expected(tag):
+    """The Python-re ground truth for one tag, in extraction column order,
+    PODS branch first like the reference's union regex."""
+    pm = PY_PODS.search(tag)
+    if pm:
+        return (pm["namespace"], pm["pod_name"], pm["container_name"], pm["pod_uuid"], None, "pods")
+    cm = PY_CONT.search(tag)
+    if cm:
+        return (cm["namespace"], cm["pod_name"], cm["container_name"], None, cm["docker_id"], "containers")
+    return (None,) * 6
+
+
 def test_spark_matches_python_on_generated_batch(spark):
-    """One Spark job over a mixed generated corpus: Spark extraction must
-    agree with Python re on every row (JVM/RE-dialect parity check)."""
+    """One Spark job over a mixed generated corpus plus ADVERSARIAL:
+    Spark extraction must agree with Python re on every row and every
+    extracted column, x_branch included (JVM/RE-dialect parity check)."""
     import pyspark.sql.types as T
 
-    tags = []
+    tags = list(ADVERSARIAL)
     for i in range(150):
         pod = f"pod-{i}" if i % 3 else f"pod.{i}.dotted"
         nsn = f"ns-{i % 7}"
@@ -66,20 +101,7 @@ def test_spark_matches_python_on_generated_batch(spark):
         if i % 10 == 0:
             tags.append(f"garbage-{i}")
     df = spark.createDataFrame([(t,) for t in tags], T.StructType([T.StructField("tool", T.StringType())]))
-    rows = extract_source_fields(df).select(
-        "tool", "x_namespace", "x_pod_name", "x_container_name", "x_pod_uuid", "x_docker_id"
-    ).collect()
+    rows = extract_source_fields(df).select("tool", *EXTRACTED_COLS).collect()
     assert len(rows) == len(tags)
     for r in rows:
-        pm = PY_PODS.search(r.tool)
-        cm = PY_CONT.search(r.tool) if pm is None else None
-        if pm:
-            assert (r.x_namespace, r.x_pod_name, r.x_container_name, r.x_pod_uuid) == (
-                pm.group("namespace"), pm.group("pod_name"), pm.group("container_name"), pm.group("pod_uuid")
-            )
-        elif cm:
-            assert (r.x_namespace, r.x_pod_name, r.x_container_name, r.x_docker_id) == (
-                cm.group("namespace"), cm.group("pod_name"), cm.group("container_name"), cm.group("docker_id")
-            )
-        else:
-            assert r.x_namespace is None
+        assert tuple(r[1:]) == _expected(r.tool), r.tool
